@@ -520,28 +520,26 @@ object SparkEntry {
             .withMetadata(f.metadata)
             .putLong("parquet.field.id", i + 1L).build())
         })
-      // conf scoped by withConfs (save/restore, never a session-global
-      // flip left behind): the id-stamped CREATE is eager, so the flag
-      // is only needed inside the body
-      withConfs(s, "spark.sql.parquet.fieldId.write.enabled" -> "true") {
-        val tbl = ManagedTable.create(
-          s.createDataFrame(orders.rdd, withIds), src)
-        sources.Iceberg.exportTable(tbl, ice)
-        // the table renames o_orderpriority -> priority_note; the files
-        // keep the old name under the same field id
-        val p = java.nio.file.Paths.get(ice, "metadata", "v1.metadata.json")
-        java.nio.file.Files.writeString(p,
-          java.nio.file.Files.readString(p).replace(
-            "\"name\" : \"o_orderpriority\"", "\"name\" : \"priority_note\""))
-        val back = sources.Iceberg.importTable(s, ice, clone)
-        require(back.schema.fieldNames.contains("priority_note") &&
-            !back.schema.fieldNames.contains("o_orderpriority"),
-          "the rename must land in the adopted schema")
-        require(back.schema.fields.forall(
-            _.metadata.contains("parquet.field.id")),
-          "the adoption must be the id-resolved regime, not name trust")
-        back.toDF
-      }
+      // the table schema carries the ids, so the CREATE stamps them into
+      // its files (ManagedTable writes id-bearing tables in a per-write
+      // scope with parquet field-id writing on)
+      val tbl = ManagedTable.create(
+        s.createDataFrame(orders.rdd, withIds), src)
+      sources.Iceberg.exportTable(tbl, ice)
+      // the table renames o_orderpriority -> priority_note; the files
+      // keep the old name under the same field id
+      val p = java.nio.file.Paths.get(ice, "metadata", "v1.metadata.json")
+      java.nio.file.Files.writeString(p,
+        java.nio.file.Files.readString(p).replace(
+          "\"name\" : \"o_orderpriority\"", "\"name\" : \"priority_note\""))
+      val back = sources.Iceberg.importTable(s, ice, clone)
+      require(back.schema.fieldNames.contains("priority_note") &&
+          !back.schema.fieldNames.contains("o_orderpriority"),
+        "the rename must land in the adopted schema")
+      require(back.schema.fields.forall(
+          _.metadata.contains("parquet.field.id")),
+        "the adoption must be the id-resolved regime, not name trust")
+      back.toDF
     }),
 
     // CONVERT TO DELTA analog: adopt the raw testdata parquet AS a
@@ -1253,23 +1251,19 @@ object SparkEntry {
       // driver-streamed write are model-mass costs the bench should
       // pay at sample scale. The whole chain is ~50 SMALL stages
       // (five type-table levels, nine ARPA sections, the sort) over a
-      // sample-sized model, so it runs in a NARROW child session —
-      // the PageRank small-regime idiom: width sized from the
-      // measured sample, AQE's per-stage materialization off below
-      // session width (pure latency on explicitly-sized tiny
-      // exchanges), caller's session conf never mutated. Production
-      // fits over full corpora keep their session width — this
-      // scoping is the declared query's, not the library's.
+      // sample-sized model, so it runs in an exec.Scoped child sized
+      // from the measured sample. Production fits over full corpora
+      // keep their session width — this scoping is the declared
+      // query's, not the library's. The result stays a child-session
+      // frame so its scoring runs at the same width.
       val nSample = operators.Sampling.hashSample(
         t(s0, dir, "documents").select("doc_id"),
         Seq("doc_id"), numerator = 1, denominator = 20, seed = 7L,
         portable = true).count()
-      val sessionP = s0.conf.get("spark.sql.shuffle.partitions").toInt
-      val loopP =
-        math.max(1L, math.min(sessionP.toLong, nSample / 100L + 1L)).toInt
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", loopP.toString)
-      if (loopP < sessionP) s.conf.set("spark.sql.adaptive.enabled", "false")
+      exec.Scoped(s0) { sc =>
+      sc.width(math.max(1L,
+        math.min(sc.callerWidth.toLong, nSample / 100L + 1L)).toInt)
+      val s = sc.session
       val docs = operators.Sampling.hashSample(t(s, dir, "documents"),
         Seq("doc_id"), numerator = 1, denominator = 20, seed = 7L,
         portable = true)
@@ -1277,7 +1271,7 @@ object SparkEntry {
       fit.write.parquet(s"$base/model")
       text.VocabStats.releaseModel(fit) // no caches; sections scan parquet
       val served = s.read.parquet(s"$base/model")
-      val arpa = text.Arpa.fromMknModel(served, order = 5).persist()
+      val arpa = sc.persist(text.Arpa.fromMknModel(served, order = 5))
       text.Arpa.write(arpa, s"$base/model.arpa")
       val back = text.Arpa.read(s, s"$base/model.arpa")
       def sig(d: org.apache.spark.sql.DataFrame) = d.select(
@@ -1316,9 +1310,9 @@ object SparkEntry {
       require(sigArpa == sig(backSharded),
         "sharded .arpa round-trip drifted: the sharded layout must " +
           "equal the single-file model")
-      arpa.unpersist()
       text.VocabStats.mknNllFromModel(served, docs,
         "doc_id", "text", order = 5)
+      }
     }),
 
     // CCNet tiering ranked by the KN trigram score — the published

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
+import graft.exec.Scoped
 
 /** PageRank over the crawl link graph — the frontier PRIORITIZATION
   * signal (which domain to fetch next, which site's budget to raise):
@@ -94,10 +95,13 @@ object PageRank {
       edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
       "reliableEvery > 0 needs SparkContext.setCheckpointDir — " +
         "reliable checkpoints write to the checkpoint directory")
-    val sp = edges.sparkSession
-    val e = edges.select(col(srcCol).cast("string").as("src"),
+    // the loop runs in a [[graft.exec.Scoped]] child: the iteration
+    // wants loop-sized shuffles and — in the small-graph regime — AQE
+    // off, while at full width it stays on for skew handling in inMass
+    Scoped(edges.sparkSession) { sc =>
+    val e = sc.persist(edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst")).distinct()
-      .filter(col("src") =!= col("dst")).persist()
+      .filter(col("src") =!= col("dst")))
     // materialize the edge list ONCE at full session parallelism (its
     // derivation — an extraction chain, a big scan — is where the data
     // volume lives) and size the iteration's shuffles from the result:
@@ -106,35 +110,14 @@ object PageRank {
     // session default so a production run (shuffle.partitions in the
     // thousands) keeps its configured width for billion-edge graphs.
     val eCount = e.count()
-    val sessionP = sp.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopP = loopPartitions.getOrElse(
-      math.max(1, math.min(sessionP.toLong, eCount / 20000L + 1L).toInt))
+    sc.width(loopPartitions.getOrElse(
+      math.max(1, math.min(sc.callerWidth.toLong, eCount / 20000L + 1L).toInt)))
 
     val outdeg0 = e.groupBy("src").agg(count(lit(1)).as("deg"))
     // edges carry their src's degree so every iteration's contribution
-    // is a single equi-join on src — degrees never re-derive
-    val edgesDegSp = e.join(outdeg0, "src")
-
-    // the loop runs in a CHILD session (same SparkContext, same cache,
-    // its own SQLConf): the iteration wants loop-sized shuffles and —
-    // in the small-graph regime — AQE off (its sequential query-stage
-    // materialization is pure latency on an explicitly-sized tiny
-    // exchange; at full width it stays on for skew handling in
-    // inMass). Mutating the CALLER's session conf instead would race
-    // concurrent queries on a shared driver. The bridge is a global
-    // temp view, resolved eagerly at Dataset creation, dropped before
-    // returning.
-    val sp2 = sp.newSession()
-    sp2.conf.set("spark.sql.shuffle.partitions", loopP.toString)
-    if (loopP < sessionP) sp2.conf.set("spark.sql.adaptive.enabled", "false")
-    val tag = "graft_pr_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    edgesDegSp.createOrReplaceGlobalTempView(tag)
-    // persist on the CHILD-session side of the bridge: the loop's
-    // consumers reference this exact Dataset, so cache hits are by
-    // object identity rather than depending on the cache manager
-    // matching a View-wrapped plan against a parent-session entry
-    val edgesDeg = sp2.table(s"global_temp.$tag").persist() // (src,dst,deg)
+    // is a single equi-join on src — degrees never re-derive; persisted
+    // in the child so the loop's consumers hit the cache by identity
+    val edgesDeg = sc.persist(e.join(outdeg0, "src")) // (src,dst,deg)
     val outdeg = edgesDeg.select("src", "deg").distinct()
     val nodeUnion = edgesDeg.select(col("src").as("node"))
       .union(edgesDeg.select(col("dst").as("node"))).distinct()
@@ -143,87 +126,74 @@ object PageRank {
 
     val teleport: Column =
       expr(s"((${dampDen - dampNum} * ${scale}L) div $dampDen) div n")
-    try {
-      // deterministically drop a superseded round's checkpoint blocks
-      // (the GraphX unpersist idiom — waiting for GC-driven cleanup
-      // would hold up to `iterations` rank-vector copies in executor
-      // memory at once)
-      def dropCheckpoint(df: DataFrame): Unit =
-        df.queryExecution.analyzed.collectFirst {
-          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-        }.foreach { r => r.unpersist(blocking = false); () }
-      // the carried state is ONE checkpointed vector per round:
-      // (node, n, out_degree, r) — n rides as a column so no rejoin,
-      // out_degree = 0 marks dangling so the re-injection aggregate is
-      // a filter over the state itself, not another join
-      // lineage cut per round: local blocks by default; every
-      // `reliableEvery`-th round a RELIABLE checkpoint when requested
-      // (see the scaladoc's fault-tolerance note). Both are EAGER, so
-      // the drop of the superseded round below is always safe.
-      def cut(df: DataFrame, round: Int): DataFrame =
-        if (reliableEvery > 0 && round % reliableEvery == 0) {
-          // persist-before-checkpoint: a reliable checkpoint runs a
-          // SECOND job to write the files — on an unpersisted plan that
-          // job recomputes the round's joins from lineage (every
-          // reliable round computed twice); cached, it re-reads blocks
-          val cached = df.persist()
-          try cached.checkpoint()
-          finally { cached.unpersist(blocking = false); () }
-        } else df.localCheckpoint()
-      var state = nodeUnion.crossJoin(nTotal)
-        .join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left")
-        .select(col("node"), col("n"),
-          coalesce(col("deg"), lit(0L)).as("out_degree"),
-          expr(s"${scale}L div n").as("r"))
-        .localCheckpoint()
-      var iter = 0
-      while (iter < iterations) {
-        val inMass = edgesDeg
-          .join(state.select(col("node").as("src"), col("r")), "src")
-          .select(col("dst"), expr("r div deg").as("c"))
-          .groupBy("dst").agg(sum("c").as("s"))
-        val dangling = broadcast(state.filter(col("out_degree") === 0L)
-          .agg(coalesce(sum("r"), lit(0L)).as("d")))
-        val prev = state
-        state = state.drop("r")
-          .join(inMass.withColumnRenamed("dst", "node"), Seq("node"),
-            "left")
-          .crossJoin(dangling)
-          .select(col("node"), col("n"), col("out_degree"),
-            (teleport +
-              expr(
-                s"($dampNum * (coalesce(s, 0L) + (d div n))) div $dampDen"))
-              .as("r"))
-          // eager localCheckpoint TRUNCATES the lineage each round (the
-          // iterative-algorithm idiom — GraphX checkpoints the same
-          // way): round k references round k−1 three times (inMass,
-          // dangling, and the carried columns), so an uncut recurrence
-          // is an exponential logical plan in both analysis and
-          // recomputation. After the cut each round's plan is one
-          // LogicalRDD deep, and the O(|V|) state vector is the only
-          // carried data.
-        state = cut(state, iter + 1)
-        dropCheckpoint(prev) // this round is materialized; k−1 is dead
-        iter += 1
-      }
-      // hand the checkpointed result back to the CALLER's session (its
-      // plan is one LogicalRDD — analysis resolves the view eagerly,
-      // so dropping the bridge views below is safe)
-      val outTag = tag + "_out"
-      state.createOrReplaceGlobalTempView(outTag)
-      val out = sp.table(s"global_temp.$outTag")
-        .select(col("node"), col("out_degree"), col("r").as("rank_fp"),
-          (col("r").cast("double") / lit(scale.toDouble)).as("rank"))
-      sp.catalog.dropGlobalTempView(outTag)
-      out
-    } finally {
-      sp.catalog.dropGlobalTempView(tag)
-      // loop-scoped caches release on BOTH paths — a task failure
-      // mid-iteration must not pin two copies of the edge list for the
-      // session's lifetime (only the final checkpointed rank vector,
-      // which IS the result, stays materialized)
-      e.unpersist(blocking = false)
-      edgesDeg.unpersist(blocking = false)
+    // deterministically drop a superseded round's checkpoint blocks
+    // (the GraphX unpersist idiom — waiting for GC-driven cleanup
+    // would hold up to `iterations` rank-vector copies in executor
+    // memory at once)
+    def dropCheckpoint(df: DataFrame): Unit =
+      df.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }.foreach { r => r.unpersist(blocking = false); () }
+    // the carried state is ONE checkpointed vector per round:
+    // (node, n, out_degree, r) — n rides as a column so no rejoin,
+    // out_degree = 0 marks dangling so the re-injection aggregate is
+    // a filter over the state itself, not another join
+    // lineage cut per round: local blocks by default; every
+    // `reliableEvery`-th round a RELIABLE checkpoint when requested
+    // (see the scaladoc's fault-tolerance note). Both are EAGER, so
+    // the drop of the superseded round below is always safe.
+    def cut(df: DataFrame, round: Int): DataFrame =
+      if (reliableEvery > 0 && round % reliableEvery == 0) {
+        // persist-before-checkpoint: a reliable checkpoint runs a
+        // SECOND job to write the files — on an unpersisted plan that
+        // job recomputes the round's joins from lineage (every
+        // reliable round computed twice); cached, it re-reads blocks
+        val cached = df.persist()
+        try cached.checkpoint()
+        finally { cached.unpersist(blocking = false); () }
+      } else df.localCheckpoint()
+    var state = nodeUnion.crossJoin(nTotal)
+      .join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left")
+      .select(col("node"), col("n"),
+        coalesce(col("deg"), lit(0L)).as("out_degree"),
+        expr(s"${scale}L div n").as("r"))
+      .localCheckpoint()
+    var iter = 0
+    while (iter < iterations) {
+      val inMass = edgesDeg
+        .join(state.select(col("node").as("src"), col("r")), "src")
+        .select(col("dst"), expr("r div deg").as("c"))
+        .groupBy("dst").agg(sum("c").as("s"))
+      val dangling = broadcast(state.filter(col("out_degree") === 0L)
+        .agg(coalesce(sum("r"), lit(0L)).as("d")))
+      val prev = state
+      state = state.drop("r")
+        .join(inMass.withColumnRenamed("dst", "node"), Seq("node"),
+          "left")
+        .crossJoin(dangling)
+        .select(col("node"), col("n"), col("out_degree"),
+          (teleport +
+            expr(
+              s"($dampNum * (coalesce(s, 0L) + (d div n))) div $dampDen"))
+            .as("r"))
+        // eager localCheckpoint TRUNCATES the lineage each round (the
+        // iterative-algorithm idiom — GraphX checkpoints the same
+        // way): round k references round k−1 three times (inMass,
+        // dangling, and the carried columns), so an uncut recurrence
+        // is an exponential logical plan in both analysis and
+        // recomputation. After the cut each round's plan is one
+        // LogicalRDD deep, and the O(|V|) state vector is the only
+        // carried data.
+      state = cut(state, iter + 1)
+      dropCheckpoint(prev) // this round is materialized; k−1 is dead
+      iter += 1
+    }
+    // hand the checkpointed result back to the CALLER's session (one
+    // LogicalRDD; the edge caches release when the scope closes — only
+    // the rank vector, which IS the result, stays materialized)
+    sc.out(state).select(col("node"), col("out_degree"),
+      col("r").as("rank_fp"),
+      (col("r").cast("double") / lit(scale.toDouble)).as("rank"))
     }
   }
 

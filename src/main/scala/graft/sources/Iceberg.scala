@@ -378,12 +378,15 @@ object Iceberg {
             val all = root.get("schemas").elements().asScala.toSeq
             val inline = root.path("schema")
             if (all.size == 1) all.head
-            else if (all.isEmpty && inline.has("fields")) inline
-            else throw new IllegalArgumentException(
+            else if (all.nonEmpty) throw new IllegalArgumentException(
               "Iceberg metadata has more than one schemas[] entry but " +
                 "no current-schema-id — the choice is ambiguous (a " +
                 "deprecated inline schema node cannot adjudicate a v2 " +
                 "schema list)")
+            else if (inline.has("fields")) inline
+            else throw new IllegalArgumentException(
+              "Iceberg metadata has an empty schemas[] and no usable " +
+                "inline schema node — there is no schema to read")
         }
       } else root.path("schema")
     require(schemaNode != null && schemaNode.has("fields"),
@@ -1155,15 +1158,11 @@ object Iceberg {
         .sortWithinPartitions("file_path", "pos")
       val withIds = spark.createDataFrame(sorted.rdd, outSchema)
       val tmpOut = root.resolve(s"_tmp-posdel-${java.util.UUID.randomUUID()}")
-      val prevWrite =
-        spark.conf.getOption("spark.sql.parquet.fieldId.write.enabled")
-      spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      try withIds.write.parquet(tmpOut.toString)
-      finally prevWrite match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.parquet.fieldId.write.enabled", v)
-        case None =>
-          spark.conf.unset("spark.sql.parquet.fieldId.write.enabled")
+      // a per-write scope stamps the ids: no flag flipped on a session
+      // other writers share
+      graft.exec.Scoped(spark,
+          "spark.sql.parquet.fieldId.write.enabled" -> "true") { sc =>
+        sc(withIds).write.parquet(tmpOut.toString)
       }
       // part-file names ascend with partition id and range partitions
       // ascend with the sort key, so moving in name order preserves the

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.exec.Scoped
 import graft.tables.ManagedTable
 import graft.text.MinHashDedup
 
@@ -168,53 +169,29 @@ object StreamingDedup {
     val fullyApplied = timed("txn-probe")(
       index.sigs.txnVersion(txn._1).exists(_ >= txn._2))
     if (fullyApplied) return 0L
-    // WIDTH-SCOPED CHILD SESSION for the per-batch pipeline (the
-    // PageRank/mkn small-regime idiom): the dedup plan is ~10 small
-    // joins/aggregations per batch, and at session width every one of
-    // them shuffles a toy-sized frame across the full partition count
-    // — measured (tools/StreamProfile, sf0.1 probe): the same two
-    // batches cost 11.6 s at width 32 and 6.5 s at width 4, all of it
-    // task-scheduling and tiny-exchange overhead. The width derives
-    // from the index's OWN scale knob: `parts` is pinned at creation
-    // to the corpus (10⁹ docs → 4096 per the scaladoc), so at
-    // production scale min(parts, sessionP) = sessionP and nothing
-    // changes; only the small-index/small-batch regime narrows. AQE
-    // off below session width per the established policy (its
-    // per-exchange stage materialization is pure latency on
-    // explicitly-sized tiny exchanges). The child session shares the
-    // SparkContext and cache; the caller's conf is never mutated.
-    // Frames cross via global temp views (resolved eagerly, dropped
-    // in the finally); the appends receive child-session frames and
-    // execute their writes at pipeline width — their file layout is
-    // unaffected (each append repartitions/coalesces explicitly).
-    val sp = batch.sparkSession
-    val sessionP = sp.conf.get("spark.sql.shuffle.partitions").toInt
-    val pipeP = math.max(1, math.min(parts, sessionP))
-    val sp2 = sp.newSession()
-    sp2.conf.set("spark.sql.shuffle.partitions", pipeP.toString)
-    if (pipeP < sessionP) sp2.conf.set("spark.sql.adaptive.enabled", "false")
-    val viewTag = "graft_sdd_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val views = scala.collection.mutable.Buffer[String]()
-    def bridge(df: DataFrame): DataFrame = {
-      val t = viewTag + "_" + views.size
-      df.createOrReplaceGlobalTempView(t)
-      views += t
-      sp2.table(s"global_temp.$t")
-    }
-    try {
-    val batchB = bridge(batch)
+    // the per-batch pipeline is ~10 small joins/aggregations, so it
+    // runs in a [[graft.exec.Scoped]] child at the index's OWN scale
+    // knob: `parts` is pinned at creation to the corpus (10⁹ docs →
+    // 4096 per the scaladoc), so at production scale the width is the
+    // session's and only the small-index/small-batch regime narrows —
+    // measured (sf0.1 two-batch profile) 11.6 s at width 32 vs 6.5 s at
+    // width 4, all of it task-scheduling and tiny-exchange overhead. The
+    // appends receive child-session frames and write at pipeline width;
+    // their file layout is unaffected (each repartitions/coalesces
+    // explicitly).
+    Scoped(batch.sparkSession) { sc =>
+    sc.width(math.max(1, math.min(parts, sc.callerWidth)))
+    val batchB = sc(batch)
     // 1. tokenize + hash ONCE for the whole batch: this single persisted
     // frame feeds the within-batch dedup, the index candidate join, the
     // verification, and the index append (tokenization dominates the
     // pipeline; an earlier formulation ran it twice per batch)
-    val hashed = batchB.select(col(idCol),
+    val hashed = sc.persist(batchB.select(col(idCol),
         graft.plans.expressions.shingle_hashes(col(textCol), shingleWidth).as(HH))
       .withColumn("__sig",
         MinHashDedup.minHashFromHashes(col(HH), numHashes))
       .select(col(idCol), col(HH),
-        MinHashDedup.bandHashes(col("__sig"), numHashes, bands).as(BANDS))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        MinHashDedup.bandHashes(col("__sig"), numHashes, bands).as(BANDS)))
 
     // batch-internal keep-first near-dedup (the batch operator's rule:
     // drop the larger id of every verified pair), over the staged frame
@@ -230,10 +207,9 @@ object StreamingDedup {
 
     // the batch's exploded band hashes (ALL docs — losers too; see the
     // residue note below)
-    val allBands = hashed.select(
+    val allBands = sc.persist(hashed.select(
         col(idCol), posexplode(col(BANDS)).as(Seq("__band", "__bh")))
-      .withColumn("__bp", pmod(col("__bh"), lit(parts.toLong)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__bp", pmod(col("__bh"), lit(parts.toLong))))
 
     // EMPTY-INDEX FAST PATH: until the first novel commit lands (always
     // batch 1, and every replay of it), the index has zero live files —
@@ -269,19 +245,17 @@ object StreamingDedup {
     // batch; replayed batches are handled by `txn`) drop. The sigs read is
     // pruned to the batch's own id-residue partitions.
     val deduped = hashed.join(losers, Seq(idCol), "left_anti")
-    val fresh = (if (indexEmpty) deduped
+    val fresh = sc.persist(if (indexEmpty) deduped
       else deduped.join(
-        bridge(prunedRead(index.sigs, "__sp", batchSp)).select(col(idCol)),
+        sc(prunedRead(index.sigs, "__sp", batchSp)).select(col(idCol)),
         Seq(idCol), "left_anti"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // 3. LSH candidates vs the index — survivors' band hashes against
     // ONLY the bucket partitions sharing the batch's residues
     val freshBands = allBands.join(fresh.select(idCol), Seq(idCol), "left_semi")
     val idxBuckets =
       if (indexEmpty) None
-      else Some(bridge(prunedRead(index.buckets, "__bp", batchBp))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      else Some(sc.persist(prunedRead(index.buckets, "__bp", batchBp)))
 
     // verification reads only the sigs partitions that can hold a
     // candidate: the residues come from the PRUNED BUCKET rows (already
@@ -296,7 +270,7 @@ object StreamingDedup {
       val candSp = timed("candSp-collect")(idx.select(
           pmod(xxhash64(col(idCol)), lit(parts.toLong)).as("__sp"))
         .distinct().collect().map(_.getLong(0)).toSeq)
-      val idxSigs = bridge(prunedRead(index.sigs, "__sp", candSp))
+      val idxSigs = sc(prunedRead(index.sigs, "__sp", candSp))
       val cs = freshBands
         .select(col(idCol).as("__new_id"), col("__band"), col("__bh"))
         .join(idx.select(col(idCol).as("__idx_id"), col("__band"), col("__bh")),
@@ -330,8 +304,7 @@ object StreamingDedup {
     // would save ~40 ms of metadata writes at the price of a
     // coordinating-log protocol.
     val novelSigs = verified.map(v =>
-      fresh.join(v, Seq(idCol), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      sc.persist(fresh.join(v, Seq(idCol), "left_anti")))
       .getOrElse(fresh)
     val novelCount = timed("novelSigs-count")(novelSigs.count())
     if (novelCount > 0) {
@@ -402,18 +375,7 @@ object StreamingDedup {
       timed("autoOptimize-sigs")(graft.operators.TableOps.autoOptimize(index.sigs, maxFiles = maxFiles))
       timed("autoOptimize-buckets")(graft.operators.TableOps.autoOptimize(index.buckets, maxFiles = maxFiles))
     }
-    timed("unpersist") {
-      hashed.unpersist()
-      fresh.unpersist()
-      allBands.unpersist()
-      idxBuckets.foreach(_.unpersist())
-      if (!(novelSigs eq fresh)) novelSigs.unpersist()
-    }
     novelCount
-    } finally {
-      // bridge views resolve eagerly at Dataset creation, so dropping
-      // them here (success or failure) is always safe
-      views.foreach(t => sp.catalog.dropGlobalTempView(t))
     }
   }
 

@@ -723,39 +723,7 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
                         tableSchema: StructType = null): Seq[String] = {
     val id = UUID.randomUUID().toString
     val out = dataDir.resolve(id)
-    // Writes to an ID-BEARING table (Iceberg imports of renamed tables
-    // scan by parquet field id) must STAMP the ids into the new files:
-    // catalyst aliases/casts drop field metadata, so an aligned frame
-    // would otherwise write id-LESS files that the table's id-resolved
-    // scans NULL-FILL silently — Spark's id matching has no name
-    // fallback, and `fieldId.read.ignoreMissing=true` null-fills too
-    // (verified empirically). Re-select with the committed schema's
-    // metadata (top-level) and cast to its types (restores nested
-    // struct ids, which live in the DataType).
-    val idSchema = Option(tableSchema).filter(ManagedTable.hasFieldIds)
-    // save/restore around the write (not a permanent session flip): the
-    // flag only stamps fields that carry metadata, but a library call
-    // must not leave a global conf mutated behind it. Set on the
-    // FRAME's session, not the table's: the write executes with the
-    // frame's SQLConf, and a caller may hand over a frame built in a
-    // width-scoped child session (the streaming-dedup per-batch
-    // pipeline) — flipping the table session's flag there would
-    // silently skip the id stamping.
-    val wsp = df.sparkSession
-    val prevIdWrite = idSchema.map(_ =>
-      wsp.conf.getOption("spark.sql.parquet.fieldId.write.enabled"))
-    val df1 = idSchema match {
-      case None => df
-      case Some(ts) =>
-        wsp.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        df.select(df.columns.map { c =>
-          ts.fields.find(_.name == c) match {
-            case Some(f) => col(c).cast(f.dataType).as(c, f.metadata)
-            case None => col(c)
-          }
-        }.toIndexedSeq: _*)
-    }
-    try {
+    def writeFiles(d: DataFrame): Unit = {
       // sorted writes (the `graft.write.sortBy` table property — Delta's
       // optimized-writes + sort practice): each write RANGE-partitions by
       // the configured columns (partition columns lead, so hive dirs keep
@@ -774,12 +742,12 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
         if (alreadyOrdered) Nil
         else props.get(ManagedTable.writeSortPropKey)
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-          .getOrElse(Nil).filter(df.columns.contains)
+          .getOrElse(Nil).filter(d.columns.contains)
+      val e = enforced(d, props)
       val staged =
-        if (sortCols.isEmpty) enforced(df1, props)
+        if (sortCols.isEmpty) e
         else {
-          val e = enforced(df1, props)
-          val keys = (parts.filter(df.columns.contains) ++ sortCols)
+          val keys = (parts.filter(d.columns.contains) ++ sortCols)
             .distinct.map(col)
           val n = math.max(1, e.rdd.getNumPartitions)
           e.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
@@ -787,14 +755,36 @@ final class ManagedTable private (val spark: SparkSession, val location: String)
       val w = staged.write.mode("overwrite")
         .options(BloomSkip.writeOptions(props))
       (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(out.toString)
-      if (parts.isEmpty) Seq(id)
-      else leafDirs(out, parts.length).map(l => id + "/" + out.relativize(l).toString)
-    } finally prevIdWrite.foreach {
-      case Some(v) =>
-        wsp.conf.set("spark.sql.parquet.fieldId.write.enabled", v)
-      case None =>
-        wsp.conf.unset("spark.sql.parquet.fieldId.write.enabled")
     }
+    // Writes to an ID-BEARING table (Iceberg imports of renamed tables
+    // scan by parquet field id) must STAMP the ids into the new files:
+    // catalyst aliases/casts drop field metadata, so an aligned frame
+    // would otherwise write id-LESS files that the table's id-resolved
+    // scans NULL-FILL silently — Spark's id matching has no name
+    // fallback, and `fieldId.read.ignoreMissing=true` null-fills too
+    // (verified empirically). Re-select with the committed schema's
+    // metadata (top-level) and cast to its types (restores nested
+    // struct ids, which live in the DataType).
+    // Each such write runs in its own [[graft.exec.Scoped]] session with
+    // id writing on — scoped to the FRAME's session, whose conf the
+    // write executes with (a caller may hand over a frame built in a
+    // width-scoped child) — so concurrent writers sharing a session
+    // never race on a shared flag.
+    Option(tableSchema).filter(ManagedTable.hasFieldIds) match {
+      case None => writeFiles(df)
+      case Some(ts) =>
+        graft.exec.Scoped(df.sparkSession,
+            "spark.sql.parquet.fieldId.write.enabled" -> "true") { sc =>
+          writeFiles(sc(df).select(df.columns.map { c =>
+            ts.fields.find(_.name == c) match {
+              case Some(f) => col(c).cast(f.dataType).as(c, f.metadata)
+              case None => col(c)
+            }
+          }.toIndexedSeq: _*))
+        }
+    }
+    if (parts.isEmpty) Seq(id)
+    else leafDirs(out, parts.length).map(l => id + "/" + out.relativize(l).toString)
   }
 
   /** The partition directories exactly `depth` levels below `root`. */

@@ -116,28 +116,19 @@ object BloomDedup {
       // those, per-shard filters would silently saturate and fpp degrade
       // toward 1, defeating the prefilter (exactness would survive only
       // through the confirm join). Raise the confs to cover the measured
-      // sizing for the duration of the one aggregation job, then restore.
+      // sizing for the one aggregation job, in a scope of its own.
       val spark = ref.sparkSession
-      val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-      val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-      val prevItems = spark.conf.getOption(itemsKey)
-      val prevBits = spark.conf.getOption(bitsKey)
-      def restore(key: String, prev: Option[String]): Unit = prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-      spark.conf.set(itemsKey,
-        math.max(maxN, prevItems.map(_.toLong).getOrElse(0L)).toString)
-      spark.conf.set(bitsKey,
-        math.max(numBits, prevBits.map(_.toLong).getOrElse(0L)).toString)
-      try {
-        hashed.groupBy(col("__s")).agg(agg.as("__f"))
+      def atLeast(key: String, n: Long) =
+        key -> math.max(n, spark.conf.getOption(key).map(_.toLong)
+          .getOrElse(0L)).toString
+      graft.exec.Scoped(spark,
+          atLeast("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", maxN),
+          atLeast("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
+            numBits)) { sc =>
+        sc(hashed).groupBy(col("__s")).agg(agg.as("__f"))
           .collect().foreach { r =>
             bytes(r.getInt(0)) = r.getAs[Array[Byte]](1)
           }
-      } finally {
-        restore(itemsKey, prevItems)
-        restore(bitsKey, prevBits)
       }
     }
     new graft.plans.BloomBankRef(bytes)

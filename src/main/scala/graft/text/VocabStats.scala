@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.exec.Scoped
 
 /** Corpus-frequency quality signals (the Gopher/CCNet vocabulary
   * filters): each document scored against the corpus's own word
@@ -250,14 +251,15 @@ object VocabStats {
                    discount: Double = 0.75): DataFrame =
     knNllFromModel(fitKnModel(df, textCol), df, idCol, textCol, discount)
 
-  /** The words → positional-transform bigram/trigram extraction shared
-    * by [[fitKnModel]] and [[knNllFromModel]] (no positional
-    * self-joins — each n-gram is built inside one `transform` over the
-    * words array).
+  /** The words → positional-transform trigram extraction shared by
+    * [[fitKnModel]] and [[knNllFromModel]] (no positional self-joins —
+    * each trigram is built inside one `transform` over the words
+    * array). Returns `(trigrams, tokenized corpus)`; the fit derives
+    * its bigram counts from the trigram types, never from a bigram
+    * stream.
     */
   private def knGrams(df: DataFrame, idCol: String, textCol: String,
-                      persistWs: Boolean)
-      : (DataFrame, DataFrame, DataFrame) = {
+                      persistWs: Boolean): (DataFrame, DataFrame) = {
     // in the FIT the trigram stream AND the bigram-derivation's
     // doc-mass boundary stream read the tokenized corpus — persist it
     // once there (the caller unpersists when its tables materialize);
@@ -265,11 +267,6 @@ object VocabStats {
     // so a cache would be a pure leak — skip it
     val ws0 = df.select(col(idCol), words(col(textCol)).as("__ws"))
     val ws = if (persistWs) ws0.persist() else ws0
-    val bg = ws.select(col(idCol), explode(transform(
-        slice(col("__ws"), lit(1), greatest(size(col("__ws")) - 1, lit(0))),
-        (w, i) => struct(w.as("w1"),
-          element_at(col("__ws"), i + 2).as("w2")))).as("__bg"))
-      .select(col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2"))
     val tg = ws.select(col(idCol), explode(transform(
         slice(col("__ws"), lit(1), greatest(size(col("__ws")) - 2, lit(0))),
         (w, i) => struct(w.as("w1"),
@@ -277,7 +274,7 @@ object VocabStats {
           element_at(col("__ws"), i + 3).as("w3")))).as("__tg"))
       .select(col(idCol), col("__tg.w1").as("__w1"),
         col("__tg.w2").as("__w2"), col("__tg.w3").as("__w3"))
-    (bg, tg, ws)
+    (tg, ws)
   }
 
   /** FIT the interpolated-KN trigram model ONCE as a persistable table —
@@ -301,7 +298,7 @@ object VocabStats {
     */
   def fitKnModel(df: DataFrame, textCol: String): DataFrame = {
     val idCol = "__kn_id"
-    val (_, tg, ws) =
+    val (tg, ws) =
       knGrams(df.withColumn(idCol, lit(0L)), idCol, textCol,
         persistWs = true)
     // tcnt is the fit's ONE token-mass explode + groupBy (persisted:
@@ -383,7 +380,7 @@ object VocabStats {
     require(discount > 0.0 && discount < 1.0,
       s"need 0 < discount < 1, got $discount")
     val d = lit(discount)
-    val (_, tg, _) = knGrams(df, idCol, textCol, persistWs = false)
+    val (tg, _) = knGrams(df, idCol, textCol, persistWs = false)
     val m = model.select(col("w1").as("__w1"), col("w2").as("__w2"),
       col("w3").as("__w3"), col("c3").as("__c3"), col("ch").as("__ch"),
       col("n3f").as("__n3f"), col("cc2").as("__cc2"),
@@ -589,46 +586,32 @@ object VocabStats {
     // histories the type recursion below doesn't build
     require(order >= 3 && order <= 8, s"need 3 <= order <= 8, got $order")
     val n = order
-    // WIDTH SIZED FROM THE MEASURED TOKEN MASS (the PageRank
-    // small-regime idiom): the fit is ~35 small stages (N−1 type-table
-    // levels, their continuation/bucket aggregations, the model joins,
-    // the stats row), so on a small corpus a session-width fit pays
-    // width × stage-count task latencies — and AQE's per-exchange
-    // stage materialization — for shuffles of a few MB (measured: the
-    // whole-stage graph, not the aggregation work, dominated the fit
-    // at sf0.1). The fit is EAGER, so it can scope both safely: it
-    // runs in a CHILD session (same SparkContext and cache, its own
-    // SQLConf — the caller's conf is never mutated, concurrent queries
-    // can't race) whose shuffle width is tokens/50k capped at the
-    // session width; at production mass the cap leaves the session
-    // width and AQE untouched. The tokenization is bridged via a
-    // global temp view and persisted on the CHILD side so cache hits
-    // are by object identity (the PageRank bridging rule).
-    val sp = df.sparkSession
-    val sp2 = sp.newSession()
-    val tag = "graft_mkn_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    df.select(words(col(textCol)).as("__ws"))
-      .createOrReplaceGlobalTempView(tag)
-    val ws = sp2.table(s"global_temp.$tag").persist()
+    // the fit is ~35 small stages (N−1 type-table levels, their
+    // continuation/bucket aggregations, the model joins, the stats
+    // row), so it runs in a [[graft.exec.Scoped]] child whose width is
+    // sized from the MEASURED token mass: tokens/50k (measured: the
+    // whole-stage graph, not the aggregation work, dominated a
+    // session-width fit at sf0.1). The fit is EAGER, so the scope can
+    // close before returning. The tokenization persists on the child
+    // side so cache hits are by object identity.
+    //
+    // The model-assembly joins are planned from REAL cached sizes (the
+    // merged levels materialize eagerly below), so the broadcast
+    // decision is sound — but the default 10 MB threshold was tuned
+    // for ESTIMATES, and the aux tables' true in-memory sizes sit just
+    // above it at small corpora (measured: losing the broadcasts cost
+    // the bench trio ~45%). 64 MB is still far below executor memory
+    // (guide §3: a few hundred MB broadcast is fine), and at
+    // production mass the type tables exceed any threshold and take
+    // the co-partitioned sort-merge path.
+    Scoped(df.sparkSession,
+        "spark.sql.autoBroadcastJoinThreshold" -> (64L << 20).toString) { sc =>
+    val ws = sc.persist(df.select(words(col(textCol)).as("__ws")))
     val tokens = ws.agg(coalesce(sum(size(col("__ws"))), lit(0L)))
       .head().getLong(0) // one job: warms the ws cache AND measures
-    val sessionP = sp.conf.get("spark.sql.shuffle.partitions").toInt
     val fitP = math.max(1L,
-      math.min(sessionP.toLong, tokens / 50000L + 1L)).toInt
-    sp2.conf.set("spark.sql.shuffle.partitions", fitP.toString)
-    if (fitP < sessionP) sp2.conf.set("spark.sql.adaptive.enabled", "false")
-    // the model-assembly joins are planned from REAL cached sizes (the
-    // merged levels materialize eagerly below), so the broadcast
-    // decision is finally sound — but the default 10 MB threshold was
-    // tuned for ESTIMATES, and the aux tables' true in-memory sizes
-    // sit just above it at small corpora (measured: losing the
-    // broadcasts cost the bench trio ~45%). 64 MB is still far below
-    // executor memory (guide §3: a few hundred MB broadcast is fine),
-    // and at production mass the type tables exceed any threshold and
-    // take the co-partitioned sort-merge path. Child-session scoped.
-    sp2.conf.set("spark.sql.autoBroadcastJoinThreshold",
-      (64L * 1024 * 1024).toString)
+      math.min(sc.callerWidth.toLong, tokens / 50000L + 1L)).toInt
+    sc.width(fitP)
 
     // k-gram occurrence stream by positional transform (no self-joins)
     def grams(k: Int): DataFrame = {
@@ -674,14 +657,14 @@ object VocabStats {
       if (n >= 4)
         topGrams.repartition(fitP, (1 until n).map(j => col(s"__w$j")): _*)
       else topGrams
-    val topT = topKeyed
+    val topT = sc.persist(topKeyed
       .groupBy((1 to n).map(j => col(s"__w$j")): _*)
-      .agg(count(lit(1)).as("__c")).persist() // c(w1..wN)
+      .agg(count(lit(1)).as("__c"))) // c(w1..wN)
     val merged: Map[Int, DataFrame] =
       ((n - 1) to 2 by -1).foldLeft(Map.empty[Int, DataFrame]) {
         (acc, k) =>
           val higher = if (k == n - 1) topT else acc(k + 1)
-          acc + (k -> suffixTypeMerge(higher, ws, k).persist())
+          acc + (k -> sc.persist(suffixTypeMerge(higher, ws, k)))
       }
     // materialize the whole chain NOW with ONE count job (merged(2)
     // reads merged(3) reads … reads topT, so one pass fills every
@@ -743,7 +726,7 @@ object VocabStats {
         count(when(col(s"__cc$k") === 3, 1)).as(s"__m${k}3x"),
         count(when(col(s"__cc$k") === 4, 1)).as(s"__m${k}4x"))
     val denBuckets: Map[Int, DataFrame] =
-      (2 until n).map(k => k -> denBucketTable(k).persist()).toMap
+      (2 until n).map(k => k -> sc.persist(denBucketTable(k))).toMap
 
     val cc1 = gT(2).groupBy(col("__w2"))
       .agg(count(lit(1)).as("__cc1"))
@@ -781,34 +764,18 @@ object VocabStats {
     }.join(cc1, Seq(s"__w$n"))
 
     val withStats = model.crossJoin(broadcast(statsDf))
-    try {
-      // EAGER localCheckpoint (the PageRank bridge rule): the model
-      // materializes once in the child session and its LogicalRDD is
-      // identity-based — every caller-session consumer reads the
-      // blocks directly, with no cache-manager plan matching to miss
-      // and no lineage to recompute (a view-bridged persist measured
-      // as a partial recompute per consumer). The blocks live until
-      // [[releaseModel]] or GC-driven cleanup; like any checkpoint
-      // they are executor-local, so a production run that must
-      // survive executor loss should write the model to storage
-      // (which the fit-once/score-many queries do anyway) and serve
-      // from the file.
-      val out = withStats.select(withStats.columns.toSeq
-        .map(c => col(c).as(c.stripPrefix("__"))): _*).localCheckpoint()
-      val outTag = tag + "_out"
-      out.createOrReplaceGlobalTempView(outTag)
-      val result = sp.table(s"global_temp.$outTag")
-      result.queryExecution.assertAnalyzed()
-      sp.catalog.dropGlobalTempView(outTag)
-      result
-    } finally {
-      sp.catalog.dropGlobalTempView(tag)
-      // loop-scoped caches release on BOTH paths — a failure mid-fit
-      // must not pin the type tables for the session's lifetime
-      // (contTables are projections of the merged levels, not caches)
-      (Seq(topT) ++ merged.values ++ denBuckets.values)
-        .foreach(_.unpersist(blocking = false))
-      ws.unpersist(blocking = false)
+    // EAGER localCheckpoint: the model materializes once in the child
+    // session and its LogicalRDD is identity-based — every caller-
+    // session consumer reads the blocks directly, with no cache-manager
+    // plan matching to miss and no lineage to recompute (a bridged
+    // persist measured as a partial recompute per consumer). The blocks
+    // live until [[releaseModel]] or GC-driven cleanup; like any
+    // checkpoint they are executor-local, so a production run that must
+    // survive executor loss should write the model to storage (which
+    // the fit-once/score-many queries do anyway) and serve from the
+    // file. Every fit-scoped cache is released when the scope closes.
+    sc.out(withStats.select(withStats.columns.toSeq
+      .map(c => col(c).as(c.stripPrefix("__"))): _*).localCheckpoint())
     }
   }
 

@@ -38,6 +38,16 @@ object GraftColumnBridge {
       ds.queryExecution.toRdd, df.schema, isStreaming = false)
   }
 
+  /** `df`'s analyzed plan as a frame of `session` — the classic
+    * `Dataset.ofRows` factory (`private[sql]`) that carries a plan
+    * across sessions of one SparkContext by value, with no catalog
+    * entry to register or drop. The plan keeps the analysis it got in
+    * `df`'s session; planning and execution take `session`'s conf.
+    */
+  def ofRows(session: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[_]].logicalPlan)
+
   /** The ANALYZABLE catalyst tree of a Column: `expression` returns a lazy
     * `ColumnNodeExpression`, which renders SQL-text columns (`expr(...)`,
     * string conditions) as one opaque node — useless for structural

@@ -1109,6 +1109,16 @@ class IcebergSpec extends SparkSpec {
       Iceberg.importTable(spark, ice, dst2)
     }
     assert(e.getMessage.contains("ambiguous"), e.getMessage)
+    // EMPTY schemas[] and no usable inline node: its own message, not
+    // the multi-entry one
+    root.set("schemas", mapper.createArrayNode())
+    root.remove("schema")
+    Files.writeString(p, mapper.writeValueAsString(root))
+    val e2 = intercept[IllegalArgumentException] {
+      Iceberg.importTable(spark, ice, dst2)
+    }
+    assert(e2.getMessage.contains("empty schemas[]") &&
+      !e2.getMessage.contains("more than one"), e2.getMessage)
   }
 
 }
